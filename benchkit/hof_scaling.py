@@ -118,12 +118,24 @@ def _edges_explode(pages):
     )
 
 
-def main():
+def _positive_int(text: str) -> int:
+    n = int(text)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be >= 1, got {n}")
+    return n
+
+
+def build_parser() -> argparse.ArgumentParser:
     ap = argparse.ArgumentParser()
     ap.add_argument("--rows", type=int, default=100_000)
     ap.add_argument("--cpus", type=int, default=32)
-    ap.add_argument("--trials", type=int, default=3)
-    args = ap.parse_args()
+    # best-of-N needs at least one timed trial
+    ap.add_argument("--trials", type=_positive_int, default=3)
+    return ap
+
+
+def main():
+    args = build_parser().parse_args()
 
     spark = (
         SparkSession.builder.master(f"local[{args.cpus}]")

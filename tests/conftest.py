@@ -58,30 +58,61 @@ def oracle(world):
     return o
 
 
-@pytest.fixture(scope="session", params=["broadcast", "semi", "shuffle"])
+@pytest.fixture(scope="session", params=["hinted", "unhinted"])
 def engine_run(request, spark, world):
     """(engine, catalog, stats, tables dict) after N_ROUNDS rounds.
 
-    Parametrized over all three html-fetch join strategies — parity must
-    hold on the broadcast path (small budgets), the key-semi path
-    (budget-scale selections, html never exchanged), and the
-    salted-shuffle path (frontier-scale budgets) alike.
+    Parametrized over the two plan shapes of the key-semi html fetch —
+    parity must hold on both. ``hinted`` runs the default thresholds
+    (key set and crawl attrs broadcast, html never exchanged);
+    ``unhinted`` sets both thresholds to 0 and turns off Spark's
+    size-based auto-broadcast, so this small world plans the shuffled
+    semi-join that frontier-scale selections get. ``tables
+    ["extraction_plans"]`` holds each round's physical plan of the
+    extractions write, taken as the write is issued.
     """
     tmp = tempfile.mkdtemp(prefix="wss_test_")
     paths = write_world_parquet(world, tmp + "/world")
     catalog = ParquetSnapshotCatalog(spark, tmp + "/state")
-    engine = CrawlEngine(
-        spark,
-        catalog,
-        world.config.politeness,
-        n_buckets=8,
-        fetch_join=request.param,
-    )
+    engine = CrawlEngine(spark, catalog, world.config.politeness, n_buckets=8)
     seeds = spark.read.parquet(paths["seeds"])
     robots = spark.read.parquet(paths["robots"])
-    pages = resolve_pages(spark.read.parquet(paths["pages"]))
-    engine.init_frontier(seeds, world.config.period_start, world.config.period_end)
-    stats = engine.run(N_ROUNDS, pages, robots, seeds)
-    tables = {"seeds": seeds, "robots": robots, "pages": pages, "paths": paths, "tmp": tmp}
+    # resolved once at ingest, as a deployment (and the benchmark) runs
+    # the engine: the plan check then sees only the round's own exchanges
+    resolve_pages(spark.read.parquet(paths["pages"])).write.parquet(
+        tmp + "/world/pages_resolved"
+    )
+    pages = spark.read.parquet(tmp + "/world/pages_resolved")
+    plans = []
+    write_partition = catalog.write_round_partition
+
+    def recording_write(table, df):
+        if table == "extractions":
+            plans.append(df._jdf.queryExecution().executedPlan())
+        return write_partition(table, df)
+
+    auto_broadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(catalog, "write_round_partition", recording_write)
+        if request.param == "unhinted":
+            mp.setattr(CrawlEngine, "SEMI_FETCH_THRESHOLD", 0)
+            mp.setattr(CrawlEngine, "ATTRS_BROADCAST_THRESHOLD", 0)
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            engine.init_frontier(
+                seeds, world.config.period_start, world.config.period_end
+            )
+            stats = engine.run(N_ROUNDS, pages, robots, seeds)
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", auto_broadcast)
+    tables = {
+        "seeds": seeds,
+        "robots": robots,
+        "pages": pages,
+        "paths": paths,
+        "tmp": tmp,
+        "plan_shape": request.param,
+        "extraction_plans": plans,
+    }
     yield engine, catalog, stats, tables
     shutil.rmtree(tmp, ignore_errors=True)

@@ -97,44 +97,84 @@ def test_compare_query_is_single_sort_merge_or_hash_full_outer(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_fetch_join_auto_selection(spark):
-    """auto picks broadcast for small selections (min of budget and
-    frontier size) and the salted shuffle for frontier-scale budgets."""
+def _kind(node) -> str:
+    return node.getClass().getSimpleName()
+
+
+def _walk(node, skip=frozenset()):
+    """``node`` and the physical-plan nodes under it, not descending
+    into children whose class is in ``skip``."""
+    yield node
+    kids = node.children()
+    for i in range(kids.size()):
+        kid = kids.apply(i)
+        if _kind(kid) not in skip:
+            yield from _walk(kid, skip)
+
+
+def _semi_joins(nodes):
+    return [
+        n for n in nodes
+        if _kind(n).endswith("JoinExec") and n.joinType().toString() == "LeftSemi"
+    ]
+
+
+def test_html_fetch_plan_shapes(engine_run):
+    """The key-semi html fetch as each round's extractions write plans
+    it. Hinted (default thresholds): the success keys broadcast into
+    the pages scan, so html reaches the Python stage with no shuffle
+    below it. Unhinted (thresholds 0): the semi-join shuffles, and the
+    pages side is hash-partitioned on the URL hash, never the host."""
+    _, _, stats, tables = engine_run
+    plans = tables["extraction_plans"]
+    assert len(plans) == len(stats)
+    for plan in plans:
+        if _kind(plan) == "AdaptiveSparkPlanExec":
+            plan = plan.executedPlan()
+        stage = [
+            n for n in _walk(plan)
+            if _kind(n) == "MapInPandasExec"
+            and "html" in n.child().output().toString()
+        ]
+        assert len(stage) == 1
+        if tables["plan_shape"] == "hinted":
+            below = list(_walk(stage[0], skip={"BroadcastExchangeExec"}))
+            assert [_kind(n) for n in _semi_joins(below)] == [
+                "BroadcastHashJoinExec"
+            ]
+            assert "ShuffleExchangeExec" not in {_kind(n) for n in below}
+        else:
+            (semi,) = _semi_joins(_walk(stage[0]))
+            assert _kind(semi) != "BroadcastHashJoinExec"
+            pages_side = next(
+                n for n in _walk(semi.left()) if _kind(n) == "ShuffleExchangeExec"
+            )
+            key = pages_side.outputPartitioning().toString()
+            assert key.startswith("hashpartitioning(url_hash#"), key
+            assert "host" not in key
+
+
+def test_crawl_engine_fields_are_its_configuration():
+    """Only configuration is a constructor argument: the plan-hint
+    limits and the bloom headroom are class constants, not fields."""
+    import dataclasses
+
     from web_scraper_spark.plans.rounds import CrawlEngine
-    from web_scraper_spark.sources.fixtures import PolitenessSpec
 
-    small_frontier = spark.range(5_000).toDF("id")
-    big_frontier = spark.range(300_000).toDF("id")
-
-    big_budget = PolitenessSpec(
-        round_seconds=86400, global_batch_urls=2_000_000, global_pause_s=86400
-    )
-    small_budget = PolitenessSpec(
-        round_seconds=600, global_batch_urls=500, global_pause_s=600
-    )
-
-    eng = CrawlEngine(spark, None, big_budget, fetch_join="auto")
-    # 2M budget but only 5k frontier rows -> selection is small -> broadcast
-    assert eng._resolve_fetch_join(small_frontier) == "broadcast"
-    # 2M budget, 300k frontier -> key-set still broadcasts -> semi
-    # (html stays on the scan layout; no exchange)
-    assert eng._resolve_fetch_join(big_frontier) == "semi"
-    # beyond the semi key-set cap -> shuffle
-    huge = PolitenessSpec(
-        round_seconds=86400,
-        global_batch_urls=50_000_000,
-        global_pause_s=86400,
-    )
-    eng_huge = CrawlEngine(spark, None, huge, fetch_join="auto")
-    huge_frontier = spark.range(30_000_000).toDF("id")
-    assert eng_huge._resolve_fetch_join(huge_frontier) == "shuffle"
-
-    eng2 = CrawlEngine(spark, None, small_budget, fetch_join="auto")
-    # budget alone already below threshold: no count job needed
-    assert eng2._resolve_fetch_join(big_frontier) == "broadcast"
-
-    forced = CrawlEngine(spark, None, big_budget, fetch_join="shuffle")
-    assert forced._resolve_fetch_join(small_frontier) == "shuffle"
+    assert [f.name for f in dataclasses.fields(CrawlEngine)] == [
+        "spark",
+        "catalog",
+        "spec",
+        "n_buckets",
+        "use_bloom",
+        "bloom_fpp",
+        "client_factory",
+        "snapshot_retention",
+        "frontier_mode",
+        "mor_compact_every",
+        "revisit",
+        "politeness_grain",
+    ]
 
 
 def test_bloom_prefilter_node_in_seen_plan(spark):

@@ -20,17 +20,23 @@ Scale notes (10^10 frontier):
   the seen anti-join and discovery merge are then co-partitioned joins.
 - the politeness window shuffles by host once; its budget output bounds
   per-host rows, killing hot-host skew for the fetch/extract stages.
-- the fetch join broadcasts nothing big; AQE handles residual skew.
+- the html fetch is a key-semi join: only the 8-byte success keys meet
+  the pages scan, extraction runs fused with that scan, and the narrow
+  crawl attrs join its html-free output. Two hints, set from the
+  selection-size bound: up to ``SEMI_FETCH_THRESHOLD`` the key set
+  broadcasts, up to ``ATTRS_BROADCAST_THRESHOLD`` the attrs do. Above
+  them Spark shuffles on the uniform URL hash (html crosses one
+  exchange, never keyed by host); AQE handles residual skew.
 - the wide ``html`` column is dropped inside the extract stage, so only
   selected rows' pages are ever decoded and nothing wide shuffles on.
 """
 
 from __future__ import annotations
 
-import os
 import time
 from collections.abc import Callable
 from dataclasses import dataclass
+from typing import ClassVar
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
@@ -210,15 +216,6 @@ class CrawlEngine:
     n_buckets: int = 16
     use_bloom: bool = True
     bloom_fpp: float = 0.01
-    # html-fetch join strategy: "broadcast" ships the politeness-bounded
-    # selection to the pages scan (html never shuffles; driver builds the
-    # hash table — right when the budget is small); "shuffle" hash-joins
-    # both sides with a salted repartition (right when the selection is
-    # large relative to driver memory). "auto" (default) picks by the
-    # round's global budget — the politeness stage caps the selection at
-    # exactly spec.global_budget rows, so the budget is a sound size
-    # estimate known at plan time. Env override for benches.
-    fetch_join: str = os.environ.get("WSS_FETCH_JOIN", "auto")
     # live-fetch mode: a client factory (one construction per Python
     # worker, P12) switches the round's fetch stage from the pages-table
     # lookup join to the Arrow-batched HTTP stage — same politeness-
@@ -267,49 +264,15 @@ class CrawlEngine:
     # (functions/domains.py; operators/politeness.select_polite grain)
     politeness_grain: str = "host"
 
-    # above this many selected URLs, broadcasting the selection means a
-    # multi-hundred-MB driver hash table (measured: 600k rows needed a
-    # 20 GiB heap) — switch to the salted shuffle join
-    BROADCAST_FETCH_THRESHOLD: int = 100_000
-    # up to here the 8-byte selected-key set ships to the pages scan as
-    # a broadcast left-semi (~160 MB at the cap) and html never leaves
-    # the scan layout; beyond it the shuffle join takes over. On a real
+    # plan-hint limits on the round's selection-size bound. Up to
+    # SEMI_FETCH_THRESHOLD the 8-byte success-key set ships to the pages
+    # scan as a broadcast left-semi (~160 MB at the cap); up to
+    # ATTRS_BROADCAST_THRESHOLD the narrow crawl attrs broadcast onto
+    # the extraction output. Above either, the side goes unhinted and
+    # Spark plans a shuffled join keyed on the URL hash. On a real
     # cluster a bloom-filter key set extends the semi window further.
-    SEMI_FETCH_THRESHOLD: int = 20_000_000
-    # selection sizes up to here broadcast the narrow crawl attrs onto
-    # the extraction output so extracted text never shuffles either
-    ATTRS_BROADCAST_THRESHOLD: int = 1_000_000
-
-    def _resolve_fetch_join(self, frontier: DataFrame, frontier_rows: int | None = None) -> str:
-        """Pick the html-fetch join strategy from a sound plan-time
-        bound on the selection size: the politeness stage emits at most
-        ``min(global_budget, frontier rows)`` rows. The frontier count
-        is a footer-only parquet scan (count(*) prunes every column),
-        so the estimate costs no data I/O; pass ``frontier_rows`` to
-        reuse a count the round already took.
-
-        Ladder: ``broadcast`` (whole selection broadcasts into the
-        scan) → ``semi`` (only the 64-bit keys broadcast; extraction
-        runs on the scan partitioning and the wide html column crosses
-        ZERO exchanges) → ``shuffle`` (both sides exchange on the URL
-        identity; the uniform hash key kills hot-host skew)."""
-        if self.fetch_join != "auto":
-            return self.fetch_join
-        est = self._selection_upper_bound(frontier, frontier_rows)
-        if est <= self.BROADCAST_FETCH_THRESHOLD:
-            return "broadcast"
-        return "semi" if est <= self.SEMI_FETCH_THRESHOLD else "shuffle"
-
-    def _selection_upper_bound(
-        self, frontier: DataFrame, frontier_rows: int | None = None
-    ) -> int:
-        est = self.spec.global_budget
-        if est > self.BROADCAST_FETCH_THRESHOLD:
-            est = min(
-                est,
-                frontier_rows if frontier_rows is not None else frontier.count(),
-            )
-        return est
+    SEMI_FETCH_THRESHOLD: ClassVar[int] = 20_000_000
+    ATTRS_BROADCAST_THRESHOLD: ClassVar[int] = 1_000_000
 
     # ------------------------------------------------------------------
     # frontier bootstrap: T1 (weekly periods) + T3 (seeds x periods)
@@ -444,7 +407,7 @@ class CrawlEngine:
 
     # how much larger than the current seen set a (re)built filter is
     # sized — the headroom later rounds grow into before the next rebuild
-    BLOOM_HEADROOM: int = 4
+    BLOOM_HEADROOM: ClassVar[int] = 4
 
     def _bloom_geometry(self, seen_total: int) -> tuple[int, int]:
         from ..operators.bloom import bloom_params
@@ -703,7 +666,8 @@ class CrawlEngine:
         # R1-R5 politeness + R8 priority + global budget. The frontier
         # row count (one footer-only statistics job) serves two
         # plan-time decisions: skipping the global-limit machinery when
-        # the budget provably cannot bind, and the fetch-join strategy.
+        # the budget provably cannot bind, and the fetch join's broadcast
+        # hints.
         frontier_rows = frontier.count()
         _section("plan_prep")
         selected = select_polite(
@@ -715,16 +679,16 @@ class CrawlEngine:
             grain=self.politeness_grain,
         )
 
-        semi_extracted = None
         if self.client_factory is not None:
             # live mode: Arrow-batched HTTP stage, no join at all
             fetched, with_html = self._fetch_live(selected, round_id)
+            extracted = extract_pages(with_html)
         else:
             # offline mode: fetch = lookup join against the pages table
             # on the 64-bit key, string-confirmed (hash-collision
             # guard). Two-phase for width: phase 1 joins a NARROW
             # projection (url identity + page_status, no html) to
-            # classify outcomes; phase 2 re-joins html for the success
+            # classify outcomes; phase 2 reads html for the success
             # rows only — the wide binary column is never read for
             # timeouts/errors and never shuffles with the outcome split.
             page_keys = pages_resolved.select(
@@ -752,76 +716,30 @@ class CrawlEngine:
                 "outcome"
             )
 
-            # Pull html ONLY for success rows.
-            page_html = pages_resolved.select(
-                F.col("url_hash").alias("p2h"),
-                F.col("url_canon").alias("p2u"),
-                "html",
-            )
-            join_cond = (successes.url_hash == page_html.p2h) & (
-                successes.url == page_html.p2u
-            )
-            fetch_strategy = self._resolve_fetch_join(frontier, frontier_rows)
-            if fetch_strategy == "broadcast":
-                # html never shuffles: the selection ships to the pages scan
-                with_html = page_html.join(
-                    F.broadcast(successes), join_cond
-                ).drop("p2h", "p2u")
-            elif fetch_strategy == "semi":
-                # html never leaves the SCAN layout even at budget-scale
-                # selections: only the 8-byte key set ships to the pages
-                # scan (left-semi on the 64-bit identity — a collision
-                # false-positive just extracts one extra page, dropped
-                # by the exact attrs join below), extraction runs fused
-                # with the scan stage on its file-split granularity, and
-                # the crawl attrs attach to the html-FREE extraction
-                # output. With the attrs side broadcast (budget-bounded,
-                # narrow) the extracted text crosses zero exchanges too.
-                # Event-log evidence (BENCH/scaling_round.md): the
-                # shuffle path moved the ~wide html through TWO ~530 MB
-                # exchanges per round; this path moves none.
-                sel_keys = successes.select(F.col("url_hash").alias("k_hash"))
-                pages_sel = page_html.join(
-                    F.broadcast(sel_keys),
-                    page_html.p2h == F.col("k_hash"),
-                    "left_semi",
-                ).select(
-                    F.col("p2h").alias("url_hash"),
-                    F.col("p2u").alias("url"),
-                    "html",
-                )
-                ext_raw = extract_pages(pages_sel)
-                est = self._selection_upper_bound(frontier, frontier_rows)
-                attrs = (
-                    F.broadcast(successes)
-                    if est <= self.ATTRS_BROADCAST_THRESHOLD
-                    else successes
-                )
-                # exact (url_hash, url) inner join: restores string-
-                # confirmed identity, same contract as the other paths
-                semi_extracted = ext_raw.join(attrs, ["url_hash", "url"])
-            else:
-                # shuffle hash join + per-row re-hash: html shuffles
-                # once, but no driver-side hash-table build; extraction
-                # runs hash-partitioned on the 64-bit url_hash itself,
-                # so rows land uniformly no matter how skewed the host
-                # mix is. (The earlier (host_bucket, url_hash % par)
-                # salt gave a hot host only `par` salt values hashed
-                # into `par` partitions — balls-in-bins collisions left
-                # the max partition 2-3x the mean; pinned adversarially
-                # in tests/test_skew.py round-level layout test.)
-                par = self.spark.sparkContext.defaultParallelism
-                with_html = (
-                    successes.join(page_html, join_cond)
-                    .drop("p2h", "p2u")
-                    .repartition(par, F.col("url_hash"))
-                )
+            # Phase 2 (key-semi, see the module scale notes): left-semi
+            # on the 64-bit identity — a collision false-positive just
+            # extracts one extra page, dropped by the exact attrs join.
+            # The politeness stage emits at most min(global budget,
+            # frontier rows) rows: a sound plan-time bound for the hints.
+            est = min(self.spec.global_budget, frontier_rows)
+            keys = successes.select(F.col("url_hash").alias("k_hash"))
+            if est <= self.SEMI_FETCH_THRESHOLD:
+                keys = F.broadcast(keys)
+            attrs = successes
+            if est <= self.ATTRS_BROADCAST_THRESHOLD:
+                attrs = F.broadcast(attrs)
+            pages_sel = pages_resolved.join(
+                keys, pages_resolved.url_hash == keys.k_hash, "left_semi"
+            ).select("url_hash", F.col("url_canon").alias("url"), "html")
+            # exact (url_hash, url) inner join: restores string-
+            # confirmed identity
+            extracted = extract_pages(pages_sel).join(attrs, ["url_hash", "url"])
         timeouts = fetched.filter(F.col("outcome") == "timeout").drop("outcome")
         empties = fetched.filter(F.col("outcome") == "empty").drop("outcome")
 
-        # P1 extraction — the only Python stage, Arrow-batched. Per-host
-        # volume is already bounded upstream by the politeness budget,
-        # which is what kills hot-host skew before this stage.
+        # P1 extraction (above) is the only Python stage, Arrow-batched.
+        # Per-host volume is already bounded upstream by the politeness
+        # budget, which is what kills hot-host skew before this stage.
         # The extraction product is materialized ONCE to the catalog and
         # every downstream consumer (fetch log, discoveries) reads the
         # WRITTEN partition with column pruning. Never .cache() this
@@ -832,12 +750,6 @@ class CrawlEngine:
         # is not an option at all. ``partition_id`` (the extraction
         # task's lineage) is materialized into the table so the re-read
         # preserves W3 per-partition lineage.
-        extracted = (
-            semi_extracted
-            if semi_extracted is not None
-            else extract_pages(with_html)
-        )
-
         extractions = extracted.select(
             F.lit(round_id).alias("round_id"),
             "url",
